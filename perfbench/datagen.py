@@ -1,23 +1,27 @@
 """Seeded input generator for the benchmark.
 
-Writes the tables the benchmark's workloads read (the TPC-H-shaped star
-schema ``region`` ... ``lineitem`` and the ``events`` stream table, one
-``<name>.parquet`` file each) into a fresh directory.  Schemas and value
-distributions follow the engine's test tables (see FIXTURES.md).
+Writes the tables a workload reads (the TPC-H-shaped star schema
+``region`` ... ``lineitem`` and the ``events`` stream table, one
+``<name>.parquet`` file each) into a fresh directory.  Schemas, sizes and
+value distributions match the engine's test tables at sf 0.01 and 0.1,
+as measured with ``perfbench/shape.py`` (the numbers are in
+perfbench/README.md, "Inputs"):
+
+- sizes scale with ``sf`` exactly as there: lineitem 6M x sf rows,
+  orders 1.5M x sf, customer 150k x sf, part 200k x sf, supplier 10k x sf,
+  events 1M x sf over 15k x sf users;
+- keys and categories are uniform draws (lineitem per order and events
+  per user come out Poisson, as measured there), amounts and dates are
+  uniform over the measured ranges, event values are exponential with
+  mean 50, rounded to cents;
+- every timestamp column is ``timestamp[us]``, the parquet type those
+  tables store.
+
 Everything is drawn from ``numpy.random.Generator(PCG64(seed))``, so a
 seed fixes every byte the engine sees while the table sizes stay the same
-for all seeds.
-
-Shape controls, all seed-independent:
-
-- ``sf``: TPC-H-style scale (lineitem = 6M x sf rows, orders = 1.5M x sf,
-  customer = 150k x sf, part = 200k x sf, supplier = 10k x sf).
-- ``events``/``users``: the event table size and key space.  A fixed
-  ``HOT_EVENT_SHARE`` of events goes to ``HOT_USER_FRAC`` of the users;
-  the seed picks which users are hot.
-
-Fact rows are written in a seeded permutation, so no query can lean on
-physical order.  ``generate`` returns the row count of every table.
+for all seeds.  Fact rows are written in a seeded permutation, so no
+query can lean on physical order.  ``generate`` returns the row count of
+every table it wrote.
 """
 
 from __future__ import annotations
@@ -28,8 +32,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-HOT_USER_FRAC = 0.01
-HOT_EVENT_SHARE = 0.2
+STAR_TABLES = ("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
 
 _REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
 _SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
@@ -60,16 +63,20 @@ def _write(out_dir: str, name: str, cols: dict, rng=None) -> int:
     return table.num_rows
 
 
-def generate(
-    out_dir: str,
-    seed: int,
-    sf: float,
-    events: int,
-    users: int,
-) -> dict[str, int]:
-    """Write every table under ``out_dir``; return ``{table: rows}``."""
+def generate(out_dir: str, seed: int, sf: float, tables: tuple[str, ...]) -> dict[str, int]:
+    """Write the star schema (if any of ``STAR_TABLES`` is asked for) and
+    ``events`` (if asked for) under ``out_dir``; return ``{table: rows}``."""
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.Generator(np.random.PCG64(seed))
+    rows: dict[str, int] = {}
+    if set(tables) & set(STAR_TABLES):
+        rows.update(_star(out_dir, rng, sf))
+    if "events" in tables:
+        rows["events"] = _events(out_dir, rng, sf)
+    return rows
+
+
+def _star(out_dir: str, rng, sf: float) -> dict[str, int]:
     rows: dict[str, int] = {}
     n_cust = max(int(150_000 * sf), 10)
     n_supp = max(int(10_000 * sf), 10)
@@ -171,26 +178,25 @@ def generate(
         },
         rng,
     )
+    return rows
 
-    # events: distinct microsecond timestamps over 30 days; a fixed share
-    # of rows lands on a seeded set of hot users
-    ts = np.sort(rng.choice(30 * _DAY_US, events, replace=False))
-    n_hot = max(int(users * HOT_USER_FRAC), 1)
-    hot_users = rng.choice(users, n_hot, replace=False)
-    user = rng.integers(0, users, events)
-    is_hot = rng.random(events) < HOT_EVENT_SHARE
-    user[is_hot] = hot_users[rng.integers(0, n_hot, int(is_hot.sum()))]
-    rows["events"] = _write(
+
+def _events(out_dir: str, rng, sf: float) -> int:
+    """Distinct microsecond timestamps over 30 days from 2024-01-01,
+    ``event_id`` in time order, users drawn uniformly."""
+    n = max(int(1_000_000 * sf), 10)
+    users = max(int(15_000 * sf), 1)
+    ts = np.sort(rng.choice(30 * _DAY_US, n, replace=False))
+    return _write(
         out_dir,
         "events",
         {
-            "event_id": np.arange(events, dtype=np.int64),
+            "event_id": np.arange(n, dtype=np.int64),
             "ts": pa.array(_EPOCH_2024 + ts.astype("m8[us]"), pa.timestamp("us")),
-            "user_id": user.astype(np.int64),
-            "event_type": np.array(_EVENT_TYPES)[rng.integers(0, 5, events)],
-            "value": np.round(rng.exponential(50.0, events), 2),
-            "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, events)],
+            "user_id": rng.integers(0, users, n),
+            "event_type": np.array(_EVENT_TYPES)[rng.integers(0, 5, n)],
+            "value": np.round(rng.exponential(50.0, n), 2),
+            "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n)],
         },
         rng,
     )
-    return rows

@@ -9,7 +9,10 @@ background thread and keeps:
   so CPU of workers that exit between polls still counts through the
   daemon that reaped them;
 - peak summed RSS;
-- the set of Python worker PIDs seen.
+- the Python workers started in the window: processes forked by the
+  worker daemon (a Python process whose parent is Python) whose start
+  time falls after the window began.  A worker that lives less than one
+  poll period is not seen.
 
 ``host_snapshot`` reads the contention telemetry (load average,
 ``/proc/stat`` busy and steal jiffies, CPU count) that lets a co-tenant
@@ -26,7 +29,8 @@ _PAGE = os.sysconf("SC_PAGE_SIZE")
 
 
 def _stat(pid: int):
-    """(ppid, cpu_s including reaped children, rss_bytes) or None."""
+    """(ppid, cpu_s including reaped children, rss_bytes, start time in
+    clock ticks since boot) or None."""
     try:
         with open(f"/proc/{pid}/stat", "rb") as f:
             raw = f.read().decode()
@@ -37,7 +41,12 @@ def _stat(pid: int):
     ppid = int(fields[1])
     cpu = sum(int(x) for x in fields[11:15]) / _TICK
     rss = int(fields[21]) * _PAGE
-    return ppid, cpu, rss
+    return ppid, cpu, rss, int(fields[19])
+
+
+def _uptime_ticks() -> float:
+    with open("/proc/uptime") as f:
+        return float(f.read().split()[0]) * _TICK
 
 
 def _kind(pid: int, root: int) -> str:
@@ -88,11 +97,12 @@ class TreeSampler:
         self._base: dict[str, float] = {}
         self._stop = threading.Event()
         self._thread: threading.Thread | None = None
-        self.python_pids: set[int] = set()
+        self._t0_ticks = 0.0
+        self.worker_pids: set[int] = set()
         self.peak_rss = 0
 
     def _poll(self) -> None:
-        rss, cpu = 0, {}
+        rss, cpu, stats = 0, {}, {}
         for pid in [self.root] + descendants(self.root):
             st = _stat(pid)
             if st is None:
@@ -100,10 +110,16 @@ class TreeSampler:
             if self._kinds.get(pid, "other") == "other":
                 # re-read until the exec settles (spark-submit -> java)
                 self._kinds[pid] = _kind(pid, self.root)
-            if self._kinds[pid] == "python":
-                self.python_pids.add(pid)
+            stats[pid] = st
             cpu[pid] = st[1]
             rss += st[2]
+        for pid, (ppid, _, _, started) in stats.items():
+            if (
+                self._kinds[pid] == "python"
+                and self._kinds.get(ppid) == "python"
+                and started >= self._t0_ticks
+            ):
+                self.worker_pids.add(pid)
         self._cpu = cpu
         self.peak_rss = max(self.peak_rss, rss)
 
@@ -119,17 +135,18 @@ class TreeSampler:
             self._poll()
 
     def start(self) -> None:
+        self._t0_ticks = float("inf")
         self._poll()
         self._base = self.cpu_by_kind()
+        self._t0_ticks = _uptime_ticks()
         self.peak_rss = 0
-        self.python_pids = set()
         self._stop.clear()
         self._thread = threading.Thread(target=self._loop, daemon=True)
         self._thread.start()
 
     def stop(self) -> dict:
         """Stop polling; return the window's CPU by process kind, peak
-        RSS and the number of Python worker processes seen."""
+        RSS and the number of Python workers started in the window."""
         self._stop.set()
         if self._thread:
             self._thread.join()
@@ -143,7 +160,7 @@ class TreeSampler:
             "cpu_s": cpu,
             "cpu_total_s": sum(cpu.values()),
             "peak_rss_mb": self.peak_rss / 1e6,
-            "python_procs": len(self.python_pids),
+            "python_worker_starts": len(self.worker_pids),
         }
 
 

@@ -1,12 +1,11 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload sql_batch --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload sql_batch --seed 1 --seconds 12 --trace 0
 
 Runs one workload of ``perfbench/workloads.py`` from one client process
 on ``local[<cpus>]`` (all CPUs this process may use):
 
-1. set-up: generate the seeded inputs (three times into fresh
-   directories; the median generation time enters ``setup_s``), start
+1. set-up: generate the seeded inputs into a fresh directory, start
    the engine session, run the workload's one-time preparation and warm
    every op up until its time stops falling;
 2. the timed region: whole passes over the workload's ops for about
@@ -44,7 +43,8 @@ import tempfile  # noqa: E402
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK_ROOT = os.path.join(ROOT, ".perfbench_work")
-GEN_REPEATS = 3
+# every timed region sees each op at least twice, whatever the host's speed
+MIN_PASSES = 2
 
 
 def _args(argv):
@@ -101,33 +101,34 @@ class Ctx:
         self.spark.catalog.clearCache()
 
 
-def warm_up(wl) -> dict:
+def warm_up(wl) -> tuple[dict, list[str]]:
     """Run each op until its times stop falling: until an attempt is at
-    most WARMUP_SETTLED faster than the one before it, or the op has run
-    WARMUP_RUNS times.  An event_stream run yields one attempt per
-    micro-batch, so one pipeline run can already show it settled."""
+    most WARMUP_SETTLED faster than the fastest attempt before it (so one
+    slow, noisy attempt does not count as a fall), or the op has had
+    WARMUP_RUNS attempts.  An attempt is one ``run_op`` call, timed as the
+    sum of the walls of the ops it yields (an event_stream attempt is one
+    pipeline run over every micro-batch).  Returns the attempt times per
+    op and the ops that reached the cap while still getting faster."""
     from workloads import WARMUP_RUNS, WARMUP_SETTLED
 
     history = {n: [] for n in wl.order}
-    runs = dict.fromkeys(history, 0)
+
+    def falling(h):
+        return len(h) < 2 or h[-1] < (1 - WARMUP_SETTLED) * min(h[:-1])
+
     pending = list(history)
     while pending:
         for name in pending:
-            history[name] += [op.wall for op in wl.run_op(name)]
-            runs[name] += 1
-        pending = [
-            n
-            for n, h in history.items()
-            if runs[n] < WARMUP_RUNS
-            and (len(h) < 2 or h[-1] < (1 - WARMUP_SETTLED) * h[-2])
-        ]
-    return {n: [round(x, 3) for x in h] for n, h in history.items()}
+            history[name].append(sum(op.wall for op in wl.run_op(name)))
+        pending = [n for n, h in history.items() if len(h) < WARMUP_RUNS and falling(h)]
+    capped = [n for n, h in history.items() if falling(h)]
+    return {n: [round(x, 3) for x in h] for n, h in history.items()}, capped
 
 
 def timed_region(wl, seconds: float) -> dict:
-    """Whole passes for about ``seconds``: another pass starts only while
-    the region would end nearer to ``seconds`` with it than without it.
-    Returns the ops, the wall time and the window's process-tree and host
+    """Whole passes for about ``seconds``: at least MIN_PASSES, and a
+    further one only while the region would end nearer to ``seconds``
+    with it than without it.  Returns the ops, the wall time and the window's process-tree and host
     telemetry."""
     from procstat import TreeSampler, host_snapshot, host_window
 
@@ -136,7 +137,7 @@ def timed_region(wl, seconds: float) -> dict:
     sampler.start()
     t0 = time.perf_counter()
     ops, pass_s, elapsed = [], [], 0.0
-    while not pass_s or elapsed + elapsed / len(pass_s) / 2 < seconds:
+    while len(pass_s) < MIN_PASSES or elapsed + elapsed / len(pass_s) / 2 < seconds:
         ops += wl.run_pass()
         pass_s.append(time.perf_counter() - t0 - elapsed)
         elapsed = time.perf_counter() - t0
@@ -258,18 +259,15 @@ def main(argv=None) -> int:
 
 def _run(args, work: str, cpus: int) -> int:
     import datagen
-    from workloads import SIZES
+    from workloads import SIZES, TABLES
 
-    # 1. inputs: generated GEN_REPEATS times, the last copy is used
-    size = SIZES[args.workload][args.size]
-    gen_s = []
-    for i in range(GEN_REPEATS):
-        data = os.path.join(work, f"input{i}")
-        t = time.perf_counter()
-        rows = datagen.generate(data, args.seed, **size)
-        gen_s.append(time.perf_counter() - t)
-        if i < GEN_REPEATS - 1:
-            shutil.rmtree(data)
+    # 1. inputs
+    data = os.path.join(work, "input")
+    t = time.perf_counter()
+    rows = datagen.generate(
+        data, args.seed, SIZES[args.workload][args.size], TABLES[args.workload]
+    )
+    gen_s = time.perf_counter() - t
 
     # 2. session
     from flink_1_12_2_spark.session import get_spark
@@ -310,9 +308,9 @@ def _measure(args, spark, data, work, rows, gen_s, session_s) -> int:
     wl.prepare()
     prepare_s = time.perf_counter() - t
     t = time.perf_counter()
-    warm = warm_up(wl)
+    warm, capped = warm_up(wl)
     warmup_s = time.perf_counter() - t
-    setup_s = (time.perf_counter() - T0) - (sum(gen_s) - statistics.median(gen_s))
+    setup_s = time.perf_counter() - T0
 
     regions = [timed_region(wl, args.seconds)]
     if args.trace:
@@ -343,11 +341,12 @@ def _measure(args, spark, data, work, rows, gen_s, session_s) -> int:
         "failed": failed,
         "wrong_outputs": dict(list(bad.items())[:5]),
         "setup": {
-            "gen_s": [round(x, 3) for x in gen_s],
+            "gen_s": round(gen_s, 3),
             "session_s": round(session_s, 3),
             "prepare_s": round(prepare_s, 3),
             "warmup_s": round(warmup_s, 3),
             "warmup_attempts_s": warm,
+            "warmup_still_falling": capped,
         },
         "check_s": round(check_s, 3),
     }

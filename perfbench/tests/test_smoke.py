@@ -26,6 +26,10 @@ with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
     SPEC = json.load(f)
 
 
+# largest share of op wall the trace may leave unexplained at tiny size
+UNEXPLAINED_MAX = {"sql_batch": 0.5, "event_stream": 0.25}
+
+
 def _metric_names(kind: str) -> set[str]:
     return {m["name"] for m in SPEC[kind]}
 
@@ -48,7 +52,10 @@ def test_tiny_run_prints_every_metric(workload):
     for name, m in list(result["metrics"].items()) + list(report["end_to_end"].items()):
         assert m["unit"] == units[name]
         assert isinstance(m["value"], (int, float))
-    assert result["metrics"]["trace.span_coverage"]["value"] == pytest.approx(1.0)
+    # the sweep hands every instant of an op to some span ...
+    assert report["trace_report"]["span_coverage"] == pytest.approx(1.0)
+    # ... and most of it to a job, a stage or a streaming segment
+    assert result["metrics"]["trace.unexplained_frac"]["value"] < UNEXPLAINED_MAX[workload]
 
 
 def test_run_without_engine_fails_fast(tmp_path):

@@ -17,7 +17,10 @@ queryPlanning, addBatch, commitOffsets) -> job -> stage for streaming.
 Self time is given by a sweep over each op's span tree: every instant of
 the op goes to the deepest spans active at it, split evenly between
 concurrent ones, so the self times of an op's spans add up to its wall
-time exactly.
+time exactly.  The share of op wall the trace does not explain is the
+self time of the container spans (the op itself, each micro-batch
+outside its lifecycle segments) plus that of build and action spans
+under which no job ran.
 """
 
 from __future__ import annotations
@@ -76,7 +79,7 @@ LAYER_UNITS = {
     "cache_registry.persistent_rdds_after_op": "count",
     "cache_registry.storage_mb": "MB",
     "trace.overhead_pct": "%",
-    "trace.span_coverage": "fraction",
+    "trace.unexplained_frac": "fraction",
 }
 
 
@@ -296,7 +299,9 @@ class Tracer:
             return statistics.median(vals) / scale if vals else 0.0
 
         tree = region["tree"]
-        spans, coverage = self._spans(ops, runs, jobs, stages, by_group, batch_jobs)
+        spans, coverage, unexplained = self._spans(
+            ops, runs, jobs, stages, by_group, batch_jobs
+        )
         values = {
             "queries.build_s": statistics.mean(build_s) if build_s else 0.0,
             "queries.build_jobs": statistics.mean(build_jobs) if build_jobs else 0.0,
@@ -319,7 +324,7 @@ class Tracer:
             "sources.write_s": tot["write_s"] / n,
             "python.wait_s": tot["py_wait"] / n,
             "python.worker_cpu_s": tree["cpu_s"].get("python", 0.0) / n,
-            "python.worker_starts": tree["python_procs"] / n,
+            "python.worker_starts": tree["python_worker_starts"] / n,
             "python.mb_to_worker": tot["py_to"] / 1e6 / n,
             "python.mb_from_worker": tot["py_from"] / 1e6 / n,
             "streaming.query_planning_ms": med("queryPlanning"),
@@ -340,7 +345,7 @@ class Tracer:
                 statistics.mean(r[3] for r in runs) if runs else 0.0
             ),
             "trace.overhead_pct": overhead_pct,
-            "trace.span_coverage": coverage,
+            "trace.unexplained_frac": unexplained,
         }
         os.makedirs(out_dir, exist_ok=True)
         path = os.path.join(out_dir, f"{stem}.spans.json")
@@ -353,6 +358,7 @@ class Tracer:
             "spans_file": os.path.relpath(path, os.path.dirname(out_dir.rstrip("/"))),
             "spans": len(spans),
             "span_coverage": round(coverage, 6),
+            "unexplained_frac": round(unexplained, 4),
             "self_s_by_span": {k: round(v, 3) for k, v in sorted(by_name.items())},
             "overhead_pct": round(overhead_pct, 3),
         }
@@ -361,8 +367,9 @@ class Tracer:
     # ---------------------------------------------------------------- spans
 
     def _spans(self, ops, runs, jobs, stages, by_group, batch_jobs):
-        """Every op's span tree with self times; returns (spans, coverage)
-        where coverage = sum of self times / sum of op wall times."""
+        """Every op's span tree with self times; returns (spans, coverage,
+        unexplained): the sum of self times and the self time the trace
+        does not explain, each as a share of the sum of op wall times."""
         out, ids = [], iter(range(1, 1 << 30))
 
         def add(tree, name, start, end, parent):
@@ -382,7 +389,7 @@ class Tracer:
                         add(tree, "stage", _ts(st["submissionTime"]),
                             _ts(st.get("completionTime")) or e, jid)
 
-        total_wall = 0.0
+        total_wall = unexplained = 0.0
         for run_op, children, _, _ in runs:
             tree: list[dict] = []
             root = add(tree, "op", run_op.start, run_op.end, None)
@@ -413,8 +420,16 @@ class Tracer:
                         return bid
 
                     add_jobs(tree, batch_jobs(c), seg_of)
-            for sid, v in self_times(tree).items():
-                next(s for s in tree if s["id"] == sid)["self_s"] = v
+            selfs = self_times(tree)
+            with_jobs = {s["parent"] for s in tree if s["name"] == "job"}
+            for s in tree:
+                s["self_s"] = selfs[s["id"]]
+                if s["name"] in ("op", "micro_batch") or (
+                    s["name"] in ("build", "action") and s["id"] not in with_jobs
+                ):
+                    unexplained += s["self_s"]
             out += tree
         covered = sum(s["self_s"] for s in out)
-        return out, (covered / total_wall if total_wall else 0.0)
+        if not total_wall:
+            return out, 0.0, 0.0
+        return out, covered / total_wall, unexplained / total_wall

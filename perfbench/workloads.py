@@ -35,17 +35,15 @@ from datetime import datetime, timezone
 
 import pyarrow.parquet as pq
 
-# input sizes per workload; "tiny" is for the smoke test only
+from datagen import STAR_TABLES
+
+# input scale per workload (see datagen.py); "tiny" is for the smoke test
 SIZES = {
-    "sql_batch": {
-        "full": dict(sf=0.01, events=20_000, users=1_500),
-        "tiny": dict(sf=0.001, events=2_000, users=150),
-    },
-    "event_stream": {
-        "full": dict(sf=0.001, events=4_000, users=1_500),
-        "tiny": dict(sf=0.001, events=1_500, users=150),
-    },
+    "sql_batch": {"full": 0.01, "tiny": 0.001},
+    "event_stream": {"full": 0.004, "tiny": 0.002},
 }
+# the tables each workload reads; no other table is generated
+TABLES = {"sql_batch": STAR_TABLES, "event_stream": ("events",)}
 
 # registry rows of sql_batch; dataset_reduce_group_top2 below completes it
 SQL_QUERIES = (
@@ -68,7 +66,7 @@ PIPELINE_ORACLE = {
 }
 
 # warm-up: repeat an op until an attempt is no more than this share
-# faster than the one before, at most WARMUP_RUNS runs of it
+# faster than the fastest one before, at most WARMUP_RUNS attempts of it
 WARMUP_SETTLED = 0.10
 WARMUP_RUNS = 3
 
