@@ -81,6 +81,17 @@ def descendants(root: int) -> list[int]:
     return out
 
 
+def tree_cpu(root: int) -> float:
+    """User + sys CPU seconds of ``root`` and every live process below
+    it, reaped children included."""
+    total = 0.0
+    for pid in [root] + descendants(root):
+        st = _stat(pid)
+        if st:
+            total += st[1]
+    return total
+
+
 class TreeSampler:
     """Poll the process tree below ``root`` every ``period`` seconds.
 

@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload sql_batch --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload sql_batch --seed 1 --seconds 16 --trace 0
 
 Runs one workload of ``perfbench/workloads.py`` from one client process
 on ``local[<cpus>]`` (all CPUs this process may use):
@@ -9,7 +9,8 @@ on ``local[<cpus>]`` (all CPUs this process may use):
    the engine session, run the workload's one-time preparation and warm
    every op up until its time stops falling;
 2. the timed region: whole passes over the workload's ops for about
-   ``--seconds``, with the process tree sampled from /proc;
+   ``--seconds``, with the process tree sampled from /proc; rates and
+   CPU per op come from the median of each op over the region's passes;
 3. the checks: every timed op's output against its DuckDB oracle.
 
 ``--trace 0`` prints the end-to-end metrics.  ``--trace 1`` runs the
@@ -39,12 +40,14 @@ import signal  # noqa: E402
 import statistics  # noqa: E402
 import sys  # noqa: E402
 import tempfile  # noqa: E402
+from dataclasses import dataclass  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK_ROOT = os.path.join(ROOT, ".perfbench_work")
-# every timed region sees each op at least twice, whatever the host's speed
-MIN_PASSES = 2
+# every timed region sees each op at least three times, whatever the
+# host's speed, so that each op has a median that one slow call cannot set
+MIN_PASSES = 3
 
 
 def _args(argv):
@@ -101,6 +104,17 @@ class Ctx:
         self.spark.catalog.clearCache()
 
 
+@dataclass
+class Call:
+    """One ``run_op`` call in a timed region: one query (sql_batch) or
+    one pipeline run over every micro-batch (event_stream)."""
+
+    name: str
+    wall: float
+    cpu: float  # process-tree CPU seconds over the call
+    ops: list
+
+
 def warm_up(wl) -> tuple[dict, list[str]]:
     """Run each op until its times stop falling: until an attempt is at
     most WARMUP_SETTLED faster than the fastest attempt before it (so one
@@ -128,24 +142,33 @@ def warm_up(wl) -> tuple[dict, list[str]]:
 def timed_region(wl, seconds: float) -> dict:
     """Whole passes for about ``seconds``: at least MIN_PASSES, and a
     further one only while the region would end nearer to ``seconds``
-    with it than without it.  Returns the ops, the wall time and the window's process-tree and host
-    telemetry."""
-    from procstat import TreeSampler, host_snapshot, host_window
+    with it than without it.  Each ``run_op`` call is recorded as a
+    ``Call`` with its wall time and the process tree's CPU over it.
+    Returns the calls, their ops, the wall time and the window's
+    process-tree and host telemetry."""
+    from procstat import TreeSampler, host_snapshot, host_window, tree_cpu
 
     sampler = TreeSampler()
     host0 = host_snapshot()
     sampler.start()
     t0 = time.perf_counter()
-    ops, pass_s, elapsed = [], [], 0.0
+    cpu_mark = tree_cpu(sampler.root)
+    calls, pass_s, elapsed = [], [], 0.0
     while len(pass_s) < MIN_PASSES or elapsed + elapsed / len(pass_s) / 2 < seconds:
-        ops += wl.run_pass()
+        for name in wl.order:
+            t = time.perf_counter()
+            ops = wl.run_op(name)
+            wall = time.perf_counter() - t
+            cpu = tree_cpu(sampler.root)
+            calls.append(Call(name, wall, cpu - cpu_mark, ops))
+            cpu_mark = cpu
         pass_s.append(time.perf_counter() - t0 - elapsed)
         elapsed = time.perf_counter() - t0
-    wall = elapsed
     tree = sampler.stop()
     return {
-        "ops": ops,
-        "wall": wall,
+        "calls": calls,
+        "ops": [op for c in calls for op in c.ops],
+        "wall": elapsed,
         "pass_s": pass_s,
         "tree": tree,
         "host": host_window(host0, host_snapshot()),
@@ -160,38 +183,62 @@ def tail(values: list[float]) -> tuple[float, float]:
     return round(100.0 * k / n, 1), sorted(values)[k - 1]
 
 
-def e2e_metrics(wl_name: str, region: dict, setup_s: float) -> tuple[dict, dict]:
-    ops, wall = region["ops"], region["wall"]
-    walls = [op.wall for op in ops]
-    done = [op for op in ops if not op.error]
+def work_of(wl_name: str, c: Call) -> int:
+    """Input events a call processed (event_stream) or queries it
+    completed (sql_batch)."""
     if wl_name == "event_stream":
-        throughput = sum(op.rows_in for op in done) / wall
-        named = "events_per_s"
-    else:
-        throughput = len(done) / wall
-        named = "queries_per_s"
+        return sum(op.rows_in for op in c.ops if not op.error)
+    return sum(1 for op in c.ops if not op.error)
+
+
+def _median_by_name(calls: list[Call], value) -> dict[str, float]:
+    by_name: dict[str, list[float]] = {}
+    for c in calls:
+        by_name.setdefault(c.name, []).append(value(c))
+    return {k: statistics.median(v) for k, v in sorted(by_name.items())}
+
+
+def e2e_metrics(wl_name: str, region: dict, setup_s: float) -> tuple[dict, dict]:
+    """Rates and CPU come from per-op medians: for each op name, the
+    median over the region's calls of its wall time, its work and its
+    CPU; a rate is the summed median work over the summed median wall,
+    i.e. the rate of one pass at median op times.  A call slowed by a
+    co-tenant burst moves its own op's median at most."""
+    calls, ops = region["calls"], region["ops"]
+    walls = [op.wall for op in ops]
+    named = "events_per_s" if wl_name == "event_stream" else "queries_per_s"
+    work = _median_by_name(calls, lambda c: work_of(wl_name, c))
+    call_s = _median_by_name(calls, lambda c: c.wall)
+    call_cpu = _median_by_name(calls, lambda c: c.cpu)
+    call_ops = _median_by_name(calls, lambda c: len(c.ops))
+    throughput = sum(work.values()) / sum(call_s.values())
     pct, tail_v = tail(walls)
     metrics = {
         "setup_s": (setup_s, "s"),
         "throughput_per_s": (throughput, "1/s"),
         "op_p50_s": (statistics.median(walls), "s"),
-        "cpu_s_per_op": (region["tree"]["cpu_total_s"] / len(ops), "s"),
+        "cpu_s_per_op": (sum(call_cpu.values()) / sum(call_ops.values()), "s"),
     }
-    by_name: dict[str, list[float]] = {}
-    for op in ops:
-        by_name.setdefault(op.name, []).append(op.wall)
     extra = {
         named: round(throughput, 4),
-        "op_p50_s_by_name": {
-            k: round(statistics.median(v), 4) for k, v in sorted(by_name.items())
-        },
+        "call_median_s": {k: round(v, 4) for k, v in call_s.items()},
+        "call_median_cpu_s": {k: round(v, 4) for k, v in call_cpu.items()},
         "op_tail_s": {"value": round(tail_v, 4), "percentile": pct, "samples": len(walls)},
         "peak_rss_mb": round(region["tree"]["peak_rss_mb"], 1),
         "ops": len(ops),
         "pass_s": [round(x, 3) for x in region["pass_s"]],
-        "timed_wall_s": round(wall, 3),
+        "timed_wall_s": round(region["wall"], 3),
+        # whole-region rates, for comparison with the median-based ones
+        "region_rate_per_s": round(
+            sum(work_of(wl_name, c) for c in calls) / region["wall"], 4
+        ),
+        "region_cpu_s_per_op": round(region["tree"]["cpu_total_s"] / len(ops), 4),
         "cpu_s_by_process": {k: round(v, 3) for k, v in region["tree"]["cpu_s"].items()},
         "host": region["host"],
+        "calls": [
+            [c.name, round(c.wall, 4), round(c.cpu, 3), [round(op.wall, 4) for op in c.ops]]
+            for c in calls
+        ],
     }
     return metrics, extra
 

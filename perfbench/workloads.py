@@ -68,7 +68,7 @@ PIPELINE_ORACLE = {
 # warm-up: repeat an op until an attempt is no more than this share
 # faster than the fastest one before, at most WARMUP_RUNS attempts of it
 WARMUP_SETTLED = 0.10
-WARMUP_RUNS = 3
+WARMUP_RUNS = 2
 
 
 @dataclass
@@ -99,12 +99,6 @@ class _Workload:
 
     def prepare(self) -> None:
         """One-time set-up after the session starts."""
-
-    def run_pass(self) -> list[Op]:
-        ops: list[Op] = []
-        for name in self.order:
-            ops += self.run_op(name)
-        return ops
 
 
 # ---------------------------------------------------------------- sql_batch
